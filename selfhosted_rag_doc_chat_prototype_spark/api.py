@@ -37,7 +37,9 @@ class RagEngine:
     @classmethod
     def ingest(cls, spark: SparkSession, staging_dir: str,
                out_dir: str | None = None, **kw) -> "RagEngine":
-        """Section 3.2 pipeline: staging dir -> chunks + embeddings."""
+        """Section 3.2 pipeline: staging dir -> chunks + embeddings.
+        With ``out_dir`` the engine serves the written store, as
+        :meth:`load` of that dir would."""
         chunks, embeddings = ingest_pipeline(spark, staging_dir, out_dir, **kw)
         return cls(spark, chunks, embeddings)
 

@@ -5,8 +5,15 @@ consume) expressed as ONE batch DataFrame DAG:
     binaryFile scan -> format dispatch (S6) -> extract (S2/S4/S5)
       -> quality gate (F1) -> [LLM-normalize T2, bypassed when clean]
       -> markdown chunk (T4/T6) -> mmh3 ids (T8) -> prefix (T7)
-      -> dropDuplicates(id)   [O11: dedup BEFORE the expensive embed]
-      -> embed (T9) -> chunks + embeddings parquet (K2/K3)
+      -> dedup on id, min(source_file) wins
+                              [O11: dedup BEFORE the expensive embed]
+      -> chunks parquet (K2)
+      -> read back the written chunks -> embed (T9) -> embeddings parquet (K3)
+
+Chunks are written first and embeddings are computed from the WRITTEN
+chunks, not from a second evaluation of the chunk DAG: the document DAG
+then runs once per ingest, so the external OCR, normalize and
+transcribe backends are called once per page, as in the reference.
 
 The reference's process choreography -- atomic claims (ST6), Redis
 queues + backpressure (ST1/ST2), file-end sentinels (ST3), staging WAL
@@ -19,11 +26,10 @@ how the reference's own test suite mocks them (SURVEY section 5). The
 stub boundary is the ``mapInPandas`` batch -- swapping in a real
 endpoint changes no plan shape.
 
-Scale: the DAG is map-only until ``dropDuplicates`` (one shuffle on
-chunk id -- content-addressed, so uniformly distributed) and the final
+Scale: the DAG is map-only until the id dedup (one shuffle on chunk
+id -- content-addressed, so uniformly distributed) and the chunks
 write. Embed happens after dedup, so duplicate content is embedded
-once. Writes partition by ``document_id`` prefix to keep per-file
-locality without small-file explosion.
+once; it is a map-only job over the written chunks.
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ import re
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text_quality as tq
@@ -284,6 +290,22 @@ def embed_stage(chunks: DataFrame, model=None, batch_size: int = 25) -> DataFram
     )
 
 
+def dedup_chunks(chunks: DataFrame) -> DataFrame:
+    """O11 content-keyed dedup: one row per chunk id, in one exchange
+    on ``id``. The winner is the smallest ``(source_file, chunk_index)``
+    so the result is well-defined when distinct files carry identical
+    bytes, or one document repeats a chunk (``dropDuplicates`` keeps an
+    arbitrary row; the reference's INSERT OR REPLACE is equally
+    last-writer-nondeterministic -- parity on content, determinism on
+    provenance)."""
+    w = Window.partitionBy("id").orderBy(F.asc("source_file"), F.asc("chunk_index"))
+    return (
+        chunks.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full ingest DAG driven from the driver's tables: documents
     become in-flight files (every 5th wrapped as HTML to exercise the
@@ -297,14 +319,8 @@ def ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     text path -- extract -> tag -> assemble -> split -> sub-split --
     reduces to the ``chunk_markdown_docs`` window algebra wrapped in
     the html-strip and passage-prefix transforms, all SQL-expressible.
-    The duplicate-id winner is pinned to ``min(source_file)`` so the
-    result is well-defined when distinct files carry identical bytes
-    (``dropDuplicates`` picks an arbitrary row; the reference's
-    INSERT OR REPLACE is equally last-writer-nondeterministic --
-    parity on content, determinism on provenance).
+    The duplicate-id winner is pinned by :func:`dedup_chunks`.
     """
-    from pyspark.sql import Window
-
     from ..sources.tables import table
 
     docs = table(spark, sf_dir, "documents")
@@ -330,12 +346,7 @@ def ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path", "file_type", "doc_id",
         F.col("first_page").alias("page"), F.col("markdown").alias("text"),
     )
-    chunks = chunk_stage(docs_md)
-    w_dup = Window.partitionBy("id").orderBy(F.asc("source_file"))
-    chunks = (
-        chunks.withColumn("_rn", F.row_number().over(w_dup))
-        .filter(F.col("_rn") == 1)
-    )
+    chunks = dedup_chunks(chunk_stage(docs_md))
     return chunks.select(
         "id", "source_file", "document_id", "type", "chunk_index", "page",
         F.length("chunk").alias("chunk_len"),
@@ -361,7 +372,8 @@ def _ingest_e2e_oracle_sql() -> str:
       600-char windows (the ``chunk_markdown_docs`` algebra);
     - ids: mmh3 chunk ids in SQL; ``chunk_len`` counts the 24-char
       ``passage: [DOC_xxxxxxxx] `` prefix the chunk column carries;
-    - dedup: min-source_file winner per id (matches the Spark side).
+    - dedup: min (source_file, chunk_index) winner per id (matches
+      :func:`dedup_chunks`).
 
     Normalize is the identity stub here (the O1 bypass path), so the
     oracle needs no LLM twin; OCR/transcription branches never fire
@@ -424,7 +436,8 @@ def _ingest_e2e_oracle_sql() -> str:
                page, chunk_len
         FROM (
             SELECT *, row_number() OVER (
-                       PARTITION BY id ORDER BY source_file ASC) AS rn
+                       PARTITION BY id
+                       ORDER BY source_file ASC, chunk_index ASC) AS rn
             FROM idd
         ) WHERE rn = 1
     """
@@ -441,11 +454,17 @@ def ingest_pipeline(
     embed_model=None,
     splitter: str = "spark",
 ) -> tuple[DataFrame, DataFrame]:
-    """The full DAG. Returns (chunks, embeddings); writes parquet when
-    ``out_dir`` is given (atomic job commit replaces the reference's
-    staging-WAL + sentinel finalize). ``splitter="reference"`` chunks
-    with the boundary-exact parity splitter (see ``chunk_stage``), so
-    ids match what the reference's producer would have written."""
+    """The full DAG. Returns (chunks, embeddings). ``splitter=
+    "reference"`` chunks with the boundary-exact parity splitter (see
+    ``chunk_stage``), so ids match what the reference's producer would
+    have written.
+
+    Without ``out_dir`` both frames are lazy plans over the staging dir.
+    With ``out_dir`` the deduped chunks are written first (atomic job
+    commit replaces the reference's staging-WAL + sentinel finalize),
+    then embedded from the written chunks, so the document DAG -- and
+    every external OCR, normalize and transcribe call in it -- runs
+    once. The returned frames then read the written store."""
     # binaryFile scans parallelize by file; a staging dir with fewer
     # files than cores under-splits, starving the (genuinely expensive)
     # per-file OCR/transcription stages -- rebalance only then, since
@@ -462,13 +481,13 @@ def ingest_pipeline(
         "path", "file_type", "doc_id",
         F.col("first_page").alias("page"), F.col("markdown").alias("text"),
     )
-    chunks = chunk_stage(docs_md, splitter=splitter)
-    # O11: content-keyed dedup BEFORE the expensive embed stage;
-    # deterministic winner via id (content-addressed, so any row is
-    # byte-identical anyway)
-    chunks = chunks.dropDuplicates(["id"])
-    embeddings = embed_stage(chunks, model=embed_model)
-    if out_dir:
-        chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks")
-        embeddings.write.mode("overwrite").parquet(f"{out_dir}/embeddings")
-    return chunks, embeddings
+
+    def stored(df: DataFrame, name: str) -> DataFrame:
+        if not out_dir:
+            return df
+        df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
+        # the known schema skips a schema-inference pass over the footers
+        return spark.read.schema(df.schema).parquet(f"{out_dir}/{name}")
+
+    chunks = stored(dedup_chunks(chunk_stage(docs_md, splitter=splitter)), "chunks")
+    return chunks, stored(embed_stage(chunks, model=embed_model), "embeddings")

@@ -66,6 +66,13 @@ def test_extract_fans_out_pages(spark, staging):
 
 
 def test_full_pipeline_writes_and_dedups(spark, staging, tmp_path):
+    from urllib.parse import urlparse
+
+    from selfhosted_rag_doc_chat_prototype_spark.api import RagEngine
+    from selfhosted_rag_doc_chat_prototype_spark.operators.embedding import (
+        embed_text_py,
+    )
+
     out = str(tmp_path / "out")
     chunks, embeddings = ingest.ingest_pipeline(spark, staging, out_dir=out)
     cdf = spark.read.parquet(f"{out}/chunks")
@@ -73,15 +80,19 @@ def test_full_pipeline_writes_and_dedups(spark, staging, tmp_path):
     crows = cdf.collect()
     assert len(crows) > 0
     # content-addressed dedup: b.txt and dup.txt have identical content
-    # -> identical chunk ids -> exactly one survives
+    # -> identical chunk ids -> exactly one survives, the min source_file
     ids = [r.id for r in crows]
     assert len(ids) == len(set(ids))
     texts = [r.chunk for r in crows]
-    assert sum("plain text file with some simple words" in t for t in texts) == 1
+    dup = [r for r in crows if "plain text file with some simple words" in r.chunk]
+    assert len(dup) == 1 and dup[0].source_file == "b.txt"
     # passage prefix enrichment (T7)
     assert all(t.startswith("passage: [DOC_") for t in texts)
-    # embeddings 1:1 with chunks, unit-norm
-    assert edf.count() == cdf.count()
+    # embeddings 1:1 with chunks, each the embedding of its written text
+    vecs = {r.id: r.embedding for r in edf.collect()}
+    assert set(vecs) == set(ids)
+    for r in crows:
+        assert vecs[r.id] == embed_text_py(r.chunk)
     norms = edf.select(
         F.aggregate(
             F.transform("embedding", lambda x: x * x), F.lit(0.0),
@@ -89,6 +100,62 @@ def test_full_pipeline_writes_and_dedups(spark, staging, tmp_path):
         ).alias("n2")
     ).collect()
     assert all(abs(r.n2 - 1.0) < 1e-6 for r in norms)
+    # with out_dir, the returned frames read the written store
+    for df in (chunks, embeddings):
+        files = df.inputFiles()
+        assert files and all(
+            urlparse(f).path.startswith(out + "/") for f in files
+        )
+    engine_out = str(tmp_path / "engine_out")
+    assert (
+        RagEngine.ingest(spark, staging, engine_out).status().collect()
+        == RagEngine.load(spark, engine_out).status().collect()
+    )
+
+
+def test_ingest_runs_document_dag_once(spark, tmp_path):
+    """One ``ingest_pipeline(..., out_dir=...)`` calls an external
+    backend once per page: embeddings come from the written chunks, not
+    from a second pass over the document DAG."""
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    (staging / "clean.txt").write_text(
+        "perfectly clean readable sentence with many normal words")
+    (staging / "bad.txt").write_text("@#$% ^&*( )!~ ### $$$ %%% ^^^ &&& *** (((")
+    calls = tmp_path / "calls"
+    calls.mkdir()
+
+    def counting_normalizer(texts):
+        # executors share the local filesystem: one marker per call
+        import uuid
+
+        (calls / uuid.uuid4().hex).touch()
+        return texts
+
+    ingest.ingest_pipeline(spark, str(staging), out_dir=str(tmp_path / "out"),
+                           normalizer=counting_normalizer)
+    assert len(list(calls.iterdir())) == 1
+
+
+def test_dedup_winner_is_deterministic(spark, tmp_path):
+    """Byte-identical files dedup to the min source_file, so two ingests
+    of one staging dir write equal chunk tables."""
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    for i in range(12):
+        (staging / f"copy{i:02d}.txt").write_text(
+            "the same body of text in every copy " * 40)
+        (staging / f"own{i:02d}.txt").write_text(f"document number {i} " * 30)
+
+    def written(name):
+        out = str(tmp_path / name)
+        ingest.ingest_pipeline(spark, str(staging), out_dir=out)
+        return sorted(spark.read.parquet(f"{out}/chunks").collect())
+
+    first = written("out1")
+    assert first == written("out2")
+    shared = [r for r in first if "the same body of text" in r.chunk]
+    assert shared and {r.source_file for r in shared} == {"copy00.txt"}
 
 
 def test_markdown_structure_flows_through(spark, staging):
